@@ -191,6 +191,39 @@ class RDF2VecPipeline:
         self.kg_ = SparkKG(triples)
         return self.kg_
 
+    def _walk_corpus(self, kg: SparkKG, entities: DataFrame) -> DataFrame:
+        """Walks from ``entities`` over ``kg`` with this pipeline's
+        walker, sampler, depth, walk budget and reverse setting — the
+        one walk dispatch behind both ``get_walks`` and ``update``."""
+        if self.walker == "wl":
+            return wl_walks(
+                kg, entities, self.max_depth, self.max_walks,
+                self.wl_iterations, self.md5_bytes,
+                self.with_reverse, self.sampler, self.seed,
+            )
+        # every branch below is token-fused: canonicalization rides
+        # the walk build via an O(|V|) token join — no entity name
+        # ever reaches the driver (an IN-list/collect is an OOM at
+        # millions of seeds)
+        if self.max_walks is None:
+            fwd = bfs_canonical_walks(
+                kg, entities, self.max_depth, self.md5_bytes,
+                keep_root=False, seed_entities=entities,
+            )
+            if not self.with_reverse:
+                return fwd
+            rev = bfs_canonical_walks(
+                kg, entities, self.max_depth, self.md5_bytes,
+                keep_root=False, seed_entities=entities,
+                is_reverse=True,
+            )
+            return combine_with_reverse(fwd, rev)
+        return dfs_canonical_walks(
+            kg, entities, self.max_depth, self.max_walks,
+            self.md5_bytes, sampler=self.sampler, seed=self.seed,
+            with_reverse=self.with_reverse, seed_entities=entities,
+        )
+
     def get_walks(self, kg: SparkKG, entities: DataFrame) -> DataFrame:
         missing = kg.missing_entities(entities)
         if not missing.isEmpty():
@@ -210,37 +243,9 @@ class RDF2VecPipeline:
             f"{self.md5_bytes}:{_df_fingerprint(entities)}"
         )
 
-        def build():
-            if self.walker == "wl":
-                return wl_walks(
-                    kg, entities, self.max_depth, self.max_walks,
-                    self.wl_iterations, self.md5_bytes,
-                    self.with_reverse, self.sampler, self.seed,
-                )
-            # every branch below is token-fused: canonicalization rides
-            # the walk build via an O(|V|) token join — no entity name
-            # ever reaches the driver (an IN-list/collect is an OOM at
-            # millions of seeds)
-            if self.max_walks is None:
-                fwd = bfs_canonical_walks(
-                    kg, entities, self.max_depth, self.md5_bytes,
-                    keep_root=False, seed_entities=entities,
-                )
-                if not self.with_reverse:
-                    return fwd
-                rev = bfs_canonical_walks(
-                    kg, entities, self.max_depth, self.md5_bytes,
-                    keep_root=False, seed_entities=entities,
-                    is_reverse=True,
-                )
-                return combine_with_reverse(fwd, rev)
-            return dfs_canonical_walks(
-                kg, entities, self.max_depth, self.max_walks,
-                self.md5_bytes, sampler=self.sampler, seed=self.seed,
-                with_reverse=self.with_reverse, seed_entities=entities,
-            )
-
-        self.walks_ = self._stage(spark, "walks", fp, build)
+        self.walks_ = self._stage(
+            spark, "walks", fp, lambda: self._walk_corpus(kg, entities)
+        )
         return self.walks_
 
     # -- reference-shaped API (rdf2vec.py:88-236) ----------------------
@@ -267,9 +272,10 @@ class RDF2VecPipeline:
     def update(self, new_transcripts: DataFrame) -> DataFrame:
         """Online update: merge triples extracted from NEW transcripts
         into the graph, re-extract walks for every entity the new
-        triples touch, REPLACE those entities' stored walks
-        (the reference's _pos_entities/_pos_walks in-place swap), and
-        refit Word2Vec over the merged corpus (gensim's incremental
+        triples touch with the walk configuration ``fit`` uses, REPLACE
+        those entities' stored walks (the reference's
+        _pos_entities/_pos_walks in-place swap), and refit Word2Vec
+        over the merged corpus (gensim's incremental
         ``is_update`` has no MLlib analogue — the persisted corpus
         makes the refit exact; documented divergence SURVEY.md E1).
 
@@ -288,10 +294,7 @@ class RDF2VecPipeline:
             .union(new_triples.select(F.col("obj").alias("name")))
             .distinct()
         )
-        new_walks = bfs_canonical_walks(
-            self.kg_, affected, self.max_depth, self.md5_bytes,
-            keep_root=False, seed_entities=affected,
-        )
+        new_walks = self._walk_corpus(self.kg_, affected)
         kept = self.walks_.join(
             affected.withColumnRenamed("name", "entity"), "entity",
             "left_anti",

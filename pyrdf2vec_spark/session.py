@@ -18,6 +18,24 @@ from pyspark.sql import SparkSession
 
 _HARD_CKPT_WARNED = False
 
+# local mode runs every executor thread inside the driver JVM, so the
+# heap default takes a fixed share of the machine's physical memory: the
+# rest is left to off-heap JVM memory, Python workers and the OS
+_DRIVER_MEM_FRACTION = 0.25
+_DRIVER_MEM_CAP_MB = 48 * 1024
+
+
+def default_driver_memory(physical_bytes: int | None = None) -> str:
+    """``spark.driver.memory`` default: a quarter of ``physical_bytes``
+    (the machine's physical memory when None), capped at 48g, as a
+    megabyte string such as ``"3840m"``."""
+    if physical_bytes is None:
+        physical_bytes = os.sysconf("SC_PHYS_PAGES") * os.sysconf(
+            "SC_PAGE_SIZE"
+        )
+    mb = int(physical_bytes * _DRIVER_MEM_FRACTION) // (1024 * 1024)
+    return f"{min(mb, _DRIVER_MEM_CAP_MB)}m"
+
 
 def _ship_package(spark: SparkSession) -> None:
     """Make pyrdf2vec_spark importable on executor Python workers
@@ -89,9 +107,11 @@ def get_spark(
         # Walk tables carry long array<string> columns; compress shuffles.
         .config("spark.shuffle.compress", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # local mode: driver JVM hosts all executor threads — size it for
-        # the thread count or 32 threads thrash GC in a small heap
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        # SPARK_DRIVER_MEM overrides the machine-sized default
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory(),
+        )
         # shuffle/spill to tmpfs when available: removes disk I/O from the
         # multicore scaling path (a real cluster has per-executor disks)
         .config(

@@ -39,7 +39,9 @@ def write_table(
 ) -> None:
     """Materialize a table. Iceberg: `catalog.db.name` with
     bucket(partition_col) spec. Parquet: directory-partitioned by a
-    deterministic bucket column (same pruning behavior)."""
+    deterministic bucket column (same pruning behavior), one file per
+    bucket: rows are shuffled by bucket first, so each bucket is written
+    by exactly one task instead of one small file per task per bucket."""
     spark = df.sparkSession
     cat = iceberg_catalog(spark)
     if cat is not None:
@@ -55,7 +57,12 @@ def write_table(
         out = df.withColumn(
             "_bucket", F.pmod(F.xxhash64(F.col(partition_col)), F.lit(buckets))
         )
-        out.write.mode("overwrite").partitionBy("_bucket").parquet(path)
+        # no partition count: AQE still sizes the tasks, and a bucket
+        # never straddles two of them
+        (
+            out.repartition(F.col("_bucket"))
+            .write.mode("overwrite").partitionBy("_bucket").parquet(path)
+        )
     else:
         out.write.mode("overwrite").parquet(path)
 
@@ -73,7 +80,7 @@ def materialize_kg(kg, base_path: str, buckets: int = DEFAULT_BUCKETS) -> None:
     tables: ``edges`` bucketed by subject (walk frontiers join on src,
     so bucket-pruned co-located reads), ``vertices`` bucketed by name.
     Iceberg tables when a catalog is configured, partitioned parquet
-    with the same bucket layout otherwise."""
+    with the same bucket layout otherwise, one file per bucket."""
     write_table(
         kg.edges, "edges", f"{base_path}/edges",
         partition_col="src", buckets=buckets,
@@ -93,7 +100,9 @@ def write_bucketed_edge_ids(
     """Materialize the walk-ready edge table — (src_id, pred, dst_id,
     src, dst) with ``*_id = xxhash64(name)``, the exact join layout the
     BFS frontier loops consume — as a Spark BUCKETED table, bucketed +
-    sorted by ``src_id``.
+    sorted by ``src_id``, one file per bucket: rows are hash-partitioned
+    on ``src_id`` into exactly ``buckets`` tasks first, the same
+    partitioning the bucket ids use, so each task writes one bucket.
 
     A bucketed scan reports hashpartitioning(src_id, buckets), so every
     per-depth frontier join reads the edge side CO-PARTITIONED straight
@@ -114,7 +123,8 @@ def write_bucketed_edge_ids(
         "dst",
     )
     (
-        df.write.mode("overwrite")
+        df.repartition(buckets, "src_id")
+        .write.mode("overwrite")
         .option("path", path)
         .bucketBy(buckets, "src_id")
         .sortBy("src_id")

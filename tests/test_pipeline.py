@@ -115,6 +115,31 @@ class TestPipeline:
         some = pipe.kg_.entity_names().limit(5)
         assert pipe.embedder.transform(some).count() == 5
 
+    def test_update_rewalks_with_fit_config(self, spark, transcripts):
+        # update() re-walks the affected entities with the pipeline's
+        # own walker config: a max_walks=2 pipeline keeps its walk
+        # budget after an update, as fit does
+        from pyrdf2vec_spark.extract import extract_triples, triples_only
+
+        pipe = RDF2VecPipeline(
+            max_depth=2, max_walks=2, vector_size=8, canonicalize=False
+        )
+        pipe.run(transcripts)
+        more = synth_transcripts(spark, 40, 10, seed=99)
+        pipe.update(more)
+        new = triples_only(extract_triples(more))
+        affected = (
+            new.select(F.col("subj").alias("entity"))
+            .union(new.select(F.col("obj").alias("entity")))
+            .distinct()
+        )
+        per_entity = [
+            r["n"] for r in pipe.walks_.join(affected, "entity")
+            .groupBy("entity").agg(F.count("*").alias("n")).collect()
+        ]
+        assert per_entity
+        assert max(per_entity) <= 2
+
 
 class TestCLI:
     def test_synth_extract_run(self, spark, tmp_path):

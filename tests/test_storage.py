@@ -26,6 +26,24 @@ def _has_iceberg_jar() -> bool:
     )
 
 
+def _data_files(path) -> list[str]:
+    """Data files directly under ``path``: no ``.crc`` checksums, no
+    ``_SUCCESS`` marker, no subdirectories."""
+    return [
+        f for f in os.listdir(path)
+        if not f.startswith((".", "_"))
+        and os.path.isfile(os.path.join(path, f))
+    ]
+
+
+def _assert_one_file_per_bucket(path) -> None:
+    buckets = [d for d in os.listdir(path) if d.startswith("_bucket=")]
+    assert buckets
+    for d in buckets:
+        files = _data_files(os.path.join(path, d))
+        assert len(files) == 1, (d, files)
+
+
 @pytest.fixture()
 def triples(spark):
     return spark.createDataFrame(
@@ -51,6 +69,24 @@ class TestParquetFallback:
         # directory layout really is bucket-partitioned (pruning works)
         assert any(d.startswith("_bucket=") for d in os.listdir(path))
 
+    def test_partitioned_write_one_file_per_bucket(self, spark, tmp_path):
+        # rows of every bucket spread over 8 input partitions: unless
+        # they are clustered by bucket first, each write task writes its
+        # own small file into every bucket directory
+        df = spark.createDataFrame(
+            [(f"s{i}", "p", f"o{i % 7}") for i in range(200)],
+            "subj string, pred string, obj string",
+        ).repartition(8)
+        assert df.rdd.getNumPartitions() == 8
+        path = str(tmp_path / "multi")
+        write_table(df, "multi", path, partition_col="subj", buckets=4)
+        _assert_one_file_per_bucket(path)
+        back = read_table(spark, "multi", path)
+        assert sorted(back.columns) == ["obj", "pred", "subj"]
+        assert sorted(tuple(r) for r in back.collect()) == sorted(
+            tuple(r) for r in df.collect()
+        )
+
     def test_write_read_roundtrip_unpartitioned(self, spark, triples, tmp_path):
         path = str(tmp_path / "plain")
         write_table(triples, "plain", path)
@@ -67,6 +103,8 @@ class TestParquetFallback:
         )
         assert edges.count() == kg.edges.count()
         assert verts.count() == kg.entity_names().count()
+        _assert_one_file_per_bucket(str(tmp_path / "kg" / "edges"))
+        _assert_one_file_per_bucket(str(tmp_path / "kg" / "vertices"))
 
     def test_upsert_is_idempotent(self, spark, triples, tmp_path):
         path = str(tmp_path / "upsert")
@@ -175,5 +213,16 @@ class TestBucketedEdgeIds:
             plan = j._jdf.queryExecution().executedPlan().toString()
             assert "Exchange hashpartitioning(src_id" not in plan, plan
             assert "Exchange hashpartitioning(cur" in plan, plan
+            # one file per non-empty bucket: Spark names each bucket
+            # file with its bucket id (part-..._00003.c000...parquet)
+            files = _data_files(str(tmp_path / "eids"))
+            file_buckets = {int(f.split("_")[-1].split(".")[0]) for f in files}
+            nonempty = {
+                r[0] for r in edges.select(
+                    F.expr("pmod(hash(src_id), 8)")
+                ).distinct().collect()
+            }
+            assert len(files) == len(file_buckets) == len(nonempty) <= 8
+            assert file_buckets == nonempty
         finally:
             spark.sql(f"DROP TABLE IF EXISTS {name}")
