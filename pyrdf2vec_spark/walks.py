@@ -36,9 +36,7 @@ CHECKPOINT_EVERY = 4  # truncate join-loop lineage every k depths
 # 1M edges ≈ 100 MB with md5-repr tokens: beyond that the per-executor
 # hash-table build dominates (measured 1.8× slower than the shuffle
 # join at 1.9M edges) — and a 100 TB graph never broadcasts its edges
-BROADCAST_EDGE_LIMIT = int(
-    __import__("os").environ.get("SPARK_GRAFT_BCAST_EDGES", "1000000")
-)
+BROADCAST_EDGE_LIMIT = 1_000_000
 
 
 def _edge_side(kg: SparkKG, df: DataFrame) -> DataFrame:
@@ -91,6 +89,51 @@ def _seed_fingerprint(entities: DataFrame) -> tuple:
     return (row["n"], None if row["h"] is None else int(row["h"]))
 
 
+def _kg_walk_cache(kg: SparkKG) -> dict:
+    """Per-KG memo of walker prep artifacts (token tables, tokenized
+    edge tables). A KG is immutable after construction, so anything
+    derived only from its edges is safe to reuse across BFS / DFS /
+    encoded walker runs — rebuilding these per run was a measured part
+    of the walk stage's fixed prep cost (BENCH/BASELINE.md)."""
+    cache = getattr(kg, "_walk_cache", None)
+    if cache is None:
+        cache = kg._walk_cache = {}
+    return cache
+
+
+_PURE = object()  # ``fpr`` of a seed-independent cache entry
+
+
+def _kg_cached(kg: SparkKG, key: tuple, build, fpr=_PURE):
+    """The one cache policy of the walkers' per-KG prep tables.
+
+    Pure entries (``fpr`` omitted) depend on the KG alone: ``build()``
+    runs once and its value is stored bare under ``key``.
+
+    Seeded overlays also depend on a seed set, so they are stored as
+    ``(value, fpr)`` with at most ONE live per key: the cached value is
+    reused only when ``fpr`` (a seed-set fingerprint) matches and is
+    not None. Otherwise a fresh one is built and the previous one
+    unpersisted, instead of accumulating an |E|-row persist per
+    distinct seed set. A result DataFrame held from an earlier call
+    then silently recomputes the evicted table's lineage if evaluated
+    afterwards: materialize (persist + count, or write) a seeded result
+    before issuing a different-seed call if you need both live."""
+    cache = _kg_walk_cache(kg)
+    prev = cache.get(key)
+    if fpr is _PURE:
+        if prev is None:
+            prev = cache[key] = build()
+        return prev
+    if prev is not None and fpr is not None and prev[1] == fpr:
+        return prev[0]
+    built = build()
+    if prev is not None:
+        prev[0].unpersist()
+    cache[key] = (built, fpr)
+    return built
+
+
 def _norm_edge_table(
     kg: SparkKG,
     sampler: str,
@@ -104,74 +147,57 @@ def _norm_edge_table(
 ) -> DataFrame:
     """The sampled walkers' weighted edge table — normalized weights,
     optional fused hop tokens, pre-partitioned + pre-sorted on the
-    per-depth join key — cached per KG (immutable after construction).
-
-    Lifecycle (the r6 verdict's dead-persist fix): the table stays
-    persisted in the per-KG cache instead of being unpersisted before
-    the caller ever materializes the returned lazy walks. Untokenized
-    tables cache per (sampler, inverse, split, alpha, set_col);
-    tokenized tables are seed-dependent, so at most ONE live overlay
-    per config is kept, keyed by ``tokens_fpr`` — a different (or
-    unknown) seed set evicts the previous overlay, whose lineage
-    recomputes if a stale result DataFrame is evaluated later (same
-    contract as bfs_canonical_walks' seeded overlay)."""
-    cache = _kg_walk_cache(kg)
+    per-depth join key — kept persisted in the per-KG cache
+    (:func:`_kg_cached`) rather than unpersisted before the caller
+    materializes the returned lazy walks. Untokenized tables are pure
+    entries per (sampler, inverse, split, alpha, set_col); tokenized
+    tables are seed-dependent, so they are that config's seeded
+    overlay, keyed by ``tokens_fpr``."""
     cfg = (sampler, bool(inverse), bool(split), round(alpha, 9), set_col)
-    if tokens is None:
-        ekey = ("edges_norm",) + cfg
-        got = cache.get(ekey)
-        if got is not None:
-            return got
-    else:
-        ekey = ("edges_norm_tok",) + cfg
-        prev = cache.get(ekey)
-        if (
-            prev is not None
-            and tokens_fpr is not None
-            and prev[1] == tokens_fpr
-        ):
-            return prev[0]
-    weights = edge_weights(kg, sampler, alpha=alpha)
-    if inverse:
-        # inverse needs the per-candidate-set max/min (sampler.py:124-127)
-        norm = normalize_hop_weights(
-            weights, [set_col], kg=kg, inverse=True, split=split,
-            obj_col=hop_col,
-        )
-    else:
-        # the exponential-race argmin is invariant under positive scaling
-        # of the candidate set, so the per-set sum-normalization windows
-        # are unnecessary — raw weights (plus the split division) give
-        # the identical sampling distribution with zero window shuffles
-        norm = weights.withColumn("norm_weight", F.col("weight").cast("double"))
-        if split:
-            from pyrdf2vec_spark.samplers import split_degrees
 
-            degs = split_degrees(kg).withColumnRenamed("name", hop_col)
-            norm = (
-                norm.join(degs, hop_col, "left")
-                .where(F.coalesce(F.col("deg"), F.lit(0)) != 0)
-                .withColumn("norm_weight", F.col("norm_weight") / F.col("deg"))
-                .drop("deg")
+    def build() -> DataFrame:
+        weights = edge_weights(kg, sampler, alpha=alpha)
+        if inverse:
+            # inverse needs the per-candidate-set max/min (sampler.py:124-127)
+            norm = normalize_hop_weights(
+                weights, [set_col], kg=kg, inverse=True, split=split,
+                obj_col=hop_col,
             )
-    norm = norm.where(
-        F.col("norm_weight").isNotNull() & (F.col("norm_weight") > 0)
-    ).select("src", "pred", "dst", "norm_weight")
-    if tokens is not None:
-        # token of the hop vertex, joined ONCE onto the edge-weight
-        # table (O(|E|)), not per walk occurrence
-        norm = norm.join(
-            tokens.withColumnRenamed("name", hop_col), hop_col
-        ).withColumnRenamed("token", "hop_tok")
-    built = _prepartition_edge_table(kg, norm, set_col).persist()
+        else:
+            # the exponential-race argmin is invariant under positive
+            # scaling of the candidate set, so the per-set
+            # sum-normalization windows are unnecessary — raw weights
+            # (plus the split division) give the identical sampling
+            # distribution with zero window shuffles
+            norm = weights.withColumn(
+                "norm_weight", F.col("weight").cast("double")
+            )
+            if split:
+                from pyrdf2vec_spark.samplers import split_degrees
+
+                degs = split_degrees(kg).withColumnRenamed("name", hop_col)
+                norm = (
+                    norm.join(degs, hop_col, "left")
+                    .where(F.coalesce(F.col("deg"), F.lit(0)) != 0)
+                    .withColumn(
+                        "norm_weight", F.col("norm_weight") / F.col("deg")
+                    )
+                    .drop("deg")
+                )
+        norm = norm.where(
+            F.col("norm_weight").isNotNull() & (F.col("norm_weight") > 0)
+        ).select("src", "pred", "dst", "norm_weight")
+        if tokens is not None:
+            # token of the hop vertex, joined ONCE onto the edge-weight
+            # table (O(|E|)), not per walk occurrence
+            norm = norm.join(
+                tokens.withColumnRenamed("name", hop_col), hop_col
+            ).withColumnRenamed("token", "hop_tok")
+        return _prepartition_edge_table(kg, norm, set_col).persist()
+
     if tokens is None:
-        cache[ekey] = built
-    else:
-        prev = cache.get(ekey)
-        if prev is not None:
-            prev[0].unpersist()
-        cache[ekey] = (built, tokens_fpr)
-    return built
+        return _kg_cached(kg, ("edges_norm",) + cfg, build)
+    return _kg_cached(kg, ("edges_norm_tok",) + cfg, build, tokens_fpr)
 
 
 # ---------------------------------------------------------------------------
@@ -246,6 +272,26 @@ def _md5_uniform(*cols) -> "F.Column":
         .cast("double")
         + F.lit(0.5)
     ) / F.lit(float(2**32))
+
+
+def _race_key(other, depth: int, seed: int, portable_hash: bool):
+    """Exponential-race key -ln(u)/w of one candidate hop, with u ∈
+    (0,1) a deterministic hash of (slot, depth, candidate, seed): the
+    argmin over a slot's candidates is drawn ∝ ``norm_weight``.
+    ``other`` is the candidate's hop-vertex column. xxhash64 by
+    default; ``portable_hash`` swaps in :func:`_md5_uniform`."""
+    cols = (
+        F.col("entity"), F.col("walk_id"), F.lit(depth),
+        F.col("pred"), other, F.lit(seed),
+    )
+    if portable_hash:
+        u = _md5_uniform(*cols)
+    else:
+        u = (
+            F.pmod(F.xxhash64(*cols), F.lit(2**31 - 1)).cast("double")
+            + F.lit(1.0)
+        ) / F.lit(float(2**31))
+    return -F.log(u) / F.col("norm_weight")
 
 
 def sampled_walks(
@@ -353,31 +399,7 @@ def sampled_walks(
             joined = walks.join(norm, walks["cur"] == norm["src"], "left")
         other = F.col("src") if is_reverse else F.col("dst")
         other_tok = F.col("hop_tok") if tokens is not None else other
-        # deterministic u ∈ (0,1) per (slot, depth, candidate)
-        if portable_hash:
-            u = _md5_uniform(
-                F.col("entity"), F.col("walk_id"), F.lit(depth),
-                F.col("pred"), other, F.lit(seed),
-            )
-        else:
-            u = (
-                (
-                    F.pmod(
-                        F.xxhash64(
-                            F.col("entity"),
-                            F.col("walk_id"),
-                            F.lit(depth),
-                            F.col("pred"),
-                            other,
-                            F.lit(seed),
-                        ),
-                        F.lit(2**31 - 1),
-                    ).cast("double")
-                    + F.lit(1.0)
-                )
-                / F.lit(float(2**31))
-            )
-        race_key = -F.log(u) / F.col("norm_weight")
+        race_key = _race_key(other, depth, seed, portable_hash)
         picked = joined.groupBy("entity", "walk_id").agg(
             F.min_by(
                 F.struct(
@@ -474,7 +496,9 @@ def extract_walks(
 def _md5_repr(name: str, md5_bytes: int) -> str:
     """Byte-exact replica of random.py:162-163:
     str(md5(name.encode()).digest()[:md5_bytes]) — the b'...' tokens the
-    golden corpora hard-code (tests/embedders/test_word2vec.py:8-77)."""
+    golden corpora hard-code (tests/embedders/test_word2vec.py:8-77).
+    The Python spec :func:`_md5_repr_sql`, the engine's only md5 repr,
+    is tested against."""
     return str(hashlib.md5(name.encode()).digest()[:md5_bytes])
 
 
@@ -524,53 +548,22 @@ def _md5_repr_sql(expr: str, md5_bytes: int) -> str:
     )
 
 
-def canonicalize_walks_sql(
-    walks: DataFrame,
-    entity_names: Iterable[str] | None = None,
-    md5_bytes: int = 8,
-    keep_root: bool = False,
-    assume_distinct: bool = False,
-) -> DataFrame:
-    """Pure-Catalyst canonicalization (no Python in the hot path) —
-    valid when the seed set is small enough for an IN-list. Used
-    automatically by canonicalize_walks."""
-    ents = list(entity_names or [])
-    repr_expr = _md5_repr_sql("v", md5_bytes)
-    keep = "i % 2 = 1"
-    if keep_root:
-        keep += " OR i = 0"
-    if ents:
-        inlist = ", ".join("'" + e.replace("'", "''") + "'" for e in ents)
-        keep += f" OR v IN ({inlist})"
-    out = walks.select(
-        "entity",
-        F.expr(
-            f"transform(walk, (v, i) -> CASE WHEN {keep} THEN v "
-            f"ELSE {repr_expr} END)"
-        ).alias("walk"),
-    )
-    if assume_distinct:
-        return out
-    return out.dropDuplicates(["entity", "walk"])
-
-
 def canonicalize_walks(
     walks: DataFrame,
     entity_names: Iterable[str] | None = None,
     md5_bytes: int | None = 8,
     keep_root: bool = False,
     assume_distinct: bool = False,
-    max_sql_entities: int = 512,
 ) -> DataFrame:
     """Map even-position non-seed vertices to md5-digest reprs; keep seed
     entities and predicates (odd positions) verbatim (random.py:142-163).
     ``keep_root=True`` additionally keeps position 0 literal — the rule
     the golden corpora of tests/embedders/test_word2vec.py:8-77 encode.
 
-    Arrow-batched pandas UDF over the walk array — zero shuffle; the
-    Python-bytes repr formatting is not expressible in Catalyst, so this
-    is one of the engine's few sanctioned UDFs (SURVEY.md §2.7). A
-    per-batch dict memoizes digests (vertex names repeat heavily).
+    Pure Catalyst (:func:`_md5_repr_sql` inside one ``transform`` over
+    the walk array) — zero shuffle, no Python worker. The seed names
+    ride the plan as an IN-list, which the optimizer turns into a hash
+    set lookup (OptimizeIn → InSet) once it is long.
 
     ``assume_distinct=True`` skips the output dedup: the vertex mapping
     is deterministic and injective up to md5 collisions, so
@@ -578,55 +571,29 @@ def canonicalize_walks(
     full shuffle of the walk corpus. Leave False for DFS output, which
     contains genuine duplicates by design (random.py:103-117).
     """
-    if md5_bytes is None:
-        if assume_distinct:
-            return walks
-        return walks.dropDuplicates(["entity", "walk"])
-    ents = frozenset(entity_names or [])
-    if len(ents) <= max_sql_entities:
-        # small/empty seed set → stay JVM-side (whole-stage codegen)
-        return canonicalize_walks_sql(
-            walks, ents, md5_bytes, keep_root, assume_distinct
+    if md5_bytes is not None:
+        keep = "i % 2 = 1"
+        if keep_root:
+            keep += " OR i = 0"
+        ents = sorted(set(entity_names or []))
+        if ents:
+            # SQL string literals unescape backslashes: escape both it
+            # and the quote so every name reaches the IN-list verbatim
+            inlist = ", ".join(
+                "'" + e.replace("\\", "\\\\").replace("'", "\\'") + "'"
+                for e in ents
+            )
+            keep += f" OR v IN ({inlist})"
+        walks = walks.select(
+            "entity",
+            F.expr(
+                f"transform(walk, (v, i) -> CASE WHEN {keep} THEN v "
+                f"ELSE {_md5_repr_sql('v', md5_bytes)} END)"
+            ).alias("walk"),
         )
-    nbytes = md5_bytes
-    kroot = keep_root
-
-    @pandas_udf(ArrayType(StringType()))
-    def _canon(col: pd.Series) -> pd.Series:
-        cache: dict[str, str] = {}
-
-        def mapv(v: str) -> str:
-            out = cache.get(v)
-            if out is None:
-                out = str(hashlib.md5(v.encode()).digest()[:nbytes])
-                cache[v] = out
-            return out
-
-        return col.map(
-            lambda walk: [
-                v
-                if (i % 2 == 1 or v in ents or (kroot and i == 0))
-                else mapv(v)
-                for i, v in enumerate(walk)
-            ]
-        )
-
-    out = walks.select("entity", _canon(F.col("walk")).alias("walk"))
     if assume_distinct:
-        return out
-    return out.dropDuplicates(["entity", "walk"])
-
-
-def _kg_walk_cache(kg: SparkKG) -> dict:
-    """Per-KG memo of walker prep artifacts (token tables, tokenized
-    edge tables). A KG is immutable after construction, so anything
-    derived only from its edges is safe to reuse across BFS / DFS /
-    encoded walker runs — rebuilding these per run was a measured part
-    of the walk stage's fixed prep cost (BENCH/BASELINE.md)."""
-    cache = getattr(kg, "_walk_cache", None)
-    if cache is None:
-        cache = kg._walk_cache = {}
-    return cache
+        return walks
+    return walks.dropDuplicates(["entity", "walk"])
 
 
 def md5_token_base(kg: SparkKG, md5_bytes: int = 8) -> DataFrame:
@@ -634,16 +601,14 @@ def md5_token_base(kg: SparkKG, md5_bytes: int = 8) -> DataFrame:
     computed once per KG per digest width and persisted; every walker
     run overlays its own seed rule on top instead of recomputing
     O(|V|) digests."""
-    cache = _kg_walk_cache(kg)
-    key = ("md5_tokens", md5_bytes)
-    if key not in cache:
-        repr_expr = _md5_repr_sql("name", md5_bytes)
-        cache[key] = (
-            kg.entity_names()
-            .select("name", F.expr(repr_expr).alias("mtoken"))
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-    return cache[key]
+    mtoken = F.expr(_md5_repr_sql("name", md5_bytes)).alias("mtoken")
+    return _kg_cached(
+        kg,
+        ("md5_tokens", md5_bytes),
+        lambda: kg.entity_names()
+        .select("name", mtoken)
+        .persist(StorageLevel.MEMORY_AND_DISK),
+    )
 
 
 def indexed_name_table(
@@ -655,17 +620,17 @@ def indexed_name_table(
     corpus layout: md5-token id = j, verbatim-name id = |V|+j, so id
     assignment never needs a vocab-wide union+distinct shuffle or a
     token-keyed re-join."""
-    cache = _kg_walk_cache(kg)
-    key = ("indexed_names", md5_bytes)
-    if key not in cache:
+
+    def build() -> tuple[DataFrame, int]:
         base, n = _zip_dense_index(md5_token_base(kg, md5_bytes), "name")
-        cache[key] = (
+        return (
             base.withColumnRenamed("_idx", "j").persist(
                 StorageLevel.MEMORY_AND_DISK
             ),
             n,
         )
-    return cache[key]
+
+    return _kg_cached(kg, ("indexed_names", md5_bytes), build)
 
 
 def vertex_tokens(
@@ -713,44 +678,24 @@ def bfs_canonical_walks(
     positions (the reference's _entities set); ``is_reverse`` walks
     predecessor edges and prepends, root ends up last (random.py:71-73).
 
-    Caching contract: the tokenized edge table is cached per KG. With
-    ``seed_entities`` it is keyed by a fingerprint of the seed set, but
-    at most ONE seeded overlay per (md5 width, direction) stays
-    persisted — calling again with a different seed set evicts the
-    previous overlay, and a result DataFrame held from the earlier call
-    silently recomputes its |E|-row join if evaluated afterwards.
-    Materialize (persist + count, or write) a seeded result before
-    issuing a different-seed call if you need both live.
+    Caching: the tokenized edge table is cached per KG per (md5 width,
+    direction) by :func:`_kg_cached` — with ``seed_entities`` as the
+    one live seeded overlay, keyed by a fingerprint of the seed set
+    (a different seed set evicts the previous overlay; see there).
     """
     if md5_bytes is None:
         return bfs_walks(kg, entities, max_depth, is_reverse=is_reverse)
     toks = vertex_tokens(kg, seed_entities, md5_bytes)
     hop_col = "src" if is_reverse else "dst"
-    # frontier join keys are xxhash64 bigints, not entity-name strings:
-    # every BFS depth sort-merge-shuffles the (growing) frontier on this
-    # key above BROADCAST_EDGE_LIMIT, and 8-byte int sort/exchange beats
-    # arbitrary-length names; walk CONTENT stays md5-repr strings
-    # (collision odds ~|V|²/2⁶⁵, same documented bound as pagerank).
-    # The tokenized edge table depends on the KG alone when no seed
-    # overlay rides the hop side — cache it per (width, direction) so
-    # repeated walker runs skip the |E|-row join + persist entirely.
-    cache = _kg_walk_cache(kg)
-    ekey = ("edges_tok", md5_bytes, hop_col)
-    skey = ("edges_tok_seeded", md5_bytes, hop_col)
-    built = seed_fpr = None
-    if seed_entities is None:
-        built = cache.get(ekey)
-    else:
-        # fingerprint the seed set (one tiny agg job) so repeat calls
-        # with the SAME seeds reuse the cached overlay instead of
-        # rebuilding the |E|-row join; a DIFFERENT seed set evicts the
-        # previous overlay (one-live-overlay contract, see docstring)
-        seed_fpr = _seed_fingerprint(seed_entities)
-        prev = cache.get(skey)
-        if prev is not None and prev[1] == seed_fpr:
-            built = prev[0]
-    if built is None:
-        built = (
+
+    def build() -> DataFrame:
+        # frontier join keys are xxhash64 bigints, not entity-name
+        # strings: every BFS depth sort-merge-shuffles the (growing)
+        # frontier on this key above BROADCAST_EDGE_LIMIT, and 8-byte
+        # int sort/exchange beats arbitrary-length names; walk CONTENT
+        # stays md5-repr strings (collision odds ~|V|²/2⁶⁵, same
+        # documented bound as pagerank)
+        tok_edges = (
             kg.edges.join(toks.withColumnRenamed("name", hop_col), hop_col)
             .withColumnRenamed("token", "hop_tok")
             .select(
@@ -760,22 +705,21 @@ def bfs_canonical_walks(
                 "hop_tok",
             )
         )
-        built = _prepartition_edge_table(
-            kg, built, "dst_id" if is_reverse else "src_id"
+        return _prepartition_edge_table(
+            kg, tok_edges, "dst_id" if is_reverse else "src_id"
         ).persist()
-        if seed_entities is None:
-            cache[ekey] = built
-        else:
-            # seed overlays are keyed by the seed-set fingerprint but
-            # the cache keeps at most ONE live overlay per (width,
-            # direction) — the previous (different-seed) table is
-            # unpersisted here (lineage recomputes it if a stale result
-            # DataFrame is still evaluated later) instead of
-            # accumulating an |E|-row persist per distinct seed set
-            prev = cache.get(skey)
-            if prev is not None:
-                prev[0].unpersist()
-            cache[skey] = (built, seed_fpr)
+
+    # without a seed overlay the table depends on the KG alone, so
+    # repeated walker runs skip the |E|-row join + persist entirely;
+    # with one, a fingerprint of the seed set (one tiny agg job) lets
+    # repeat calls with the SAME seeds reuse the cached overlay
+    if seed_entities is None:
+        built = _kg_cached(kg, ("edges_tok", md5_bytes, hop_col), build)
+    else:
+        built = _kg_cached(
+            kg, ("edges_tok_seeded", md5_bytes, hop_col), build,
+            _seed_fingerprint(seed_entities),
+        )
     edges_tok = _edge_side(kg, built)
     root_tok = (
         F.col("entity")
@@ -912,9 +856,15 @@ def bfs_encoded_walks(
     seed extras so every edge-table id is seed-independent — that is
     what lets the tokenized integer edge table cache per KG. Ids are
     near-dense (verbatim slots exist only for seeds), so the parquet
-    dictionary still sees ≤ 2|V|+|P|+|seeds| distinct values. One edge-case divergence vs the string-keyed vocab: a
-    predicate URI that also occurs as a seed entity name gets two ids
-    (one per role) — decoded corpora are identical either way.
+    dictionary still sees ≤ 2|V|+|P|+|seeds| distinct values. One
+    edge-case divergence vs the string-keyed vocab: a predicate URI
+    that also occurs as a seed entity name gets two ids (one per role)
+    — decoded corpora are identical either way.
+
+    Caching: the predicate id table and the tokenized integer edge
+    table are cached per KG per md5 width by :func:`_kg_cached` — with
+    ``seed_entities`` the edge table is the one live seeded overlay,
+    keyed by a fingerprint of the seed set (see there).
     """
     idx, n_v = indexed_name_table(kg, md5_bytes)
     e = kg.edges
@@ -961,17 +911,14 @@ def bfs_encoded_walks(
     # shuffle-partition change would otherwise silently pair a cached
     # edge table with a differently-numbered vocab. The cache hit also
     # skips the dense-index pass's driver collect.
-    cache = _kg_walk_cache(kg)
-    pkey = ("pred_ids", md5_bytes)
-    got = cache.get(pkey)
-    if got is None:
+    def build_pred_ids() -> tuple[DataFrame, int]:
         pred_raw, n_p = _zip_dense_index(preds, "token")
         pred_tab = pred_raw.select(
             "token", (F.col("_idx") + F.lit(2 * n_v)).alias("tid")
         ).persist(StorageLevel.MEMORY_AND_DISK)
-        cache[pkey] = (pred_tab, n_p)
-    else:
-        pred_tab, n_p = got
+        return pred_tab, n_p
+
+    pred_tab, n_p = _kg_cached(kg, ("pred_ids", md5_bytes), build_pred_ids)
     extras_tab, _ = _zip_dense_index(extras.distinct(), "token")
     extras_tab = extras_tab.select(
         "token", (F.col("_idx") + F.lit(2 * n_v + n_p)).alias("tid")
@@ -983,24 +930,11 @@ def bfs_encoded_walks(
         )
     )
     # the tokenized integer edge table is KG-pure when no seed overlay
-    # rides the hop side — cache it per (md5 width) exactly like
-    # bfs_canonical_walks' string-token table, so repeated encoded-walk
-    # jobs (and bench reps) skip the |E|-row join + repartition AND
-    # stop accumulating one persisted |E|-row table per call. Seeded
-    # calls keep at most ONE live overlay, keyed by the seed-set
-    # fingerprint (same contract as bfs_canonical_walks).
-    ekey = ("edges_ids", md5_bytes)
-    skey = ("edges_ids_seeded", md5_bytes)
-    built = seed_fpr = None
-    if seed_entities is None:
-        built = cache.get(ekey)
-    else:
-        seed_fpr = _seed_fingerprint(seed_entities)
-        prev = cache.get(skey)
-        if prev is not None and prev[1] == seed_fpr:
-            built = prev[0]
-    if built is None:
-        built = _prepartition_edge_table(
+    # rides the hop side, so repeated encoded-walk jobs skip the
+    # |E|-row join + repartition and stop accumulating one persisted
+    # |E|-row table per call
+    def build_edges() -> DataFrame:
+        return _prepartition_edge_table(
             kg,
             e.join(hop_map.withColumnRenamed("name", "dst"), "dst")
             .join(pred_tid, "pred")
@@ -1012,13 +946,14 @@ def bfs_encoded_walks(
             ),
             "src_id",
         ).persist()
-        if seed_entities is None:
-            cache[ekey] = built
-        else:
-            prev = cache.get(skey)
-            if prev is not None:
-                prev[0].unpersist()
-            cache[skey] = (built, seed_fpr)
+
+    if seed_entities is None:
+        built = _kg_cached(kg, ("edges_ids", md5_bytes), build_edges)
+    else:
+        built = _kg_cached(
+            kg, ("edges_ids_seeded", md5_bytes), build_edges,
+            _seed_fingerprint(seed_entities),
+        )
     edges_tok = _edge_side(kg, built)
     seeds = seeds_j.join(
         tail.select(F.col("token").alias("entity"),
@@ -1410,15 +1345,11 @@ def wl_labels(kg: SparkKG, wl_iterations: int, md5_bytes: int | None = 8) -> Dat
 
     nodes = ent_nodes.unionByName(occ.select("node", "name")).persist()
     labels = nodes.select("node", F.col("name").alias("label")).persist()
-
-    nbytes = md5_bytes
-
-    @pandas_udf(StringType())
-    def _digest_repr(col: pd.Series) -> pd.Series:
-        if nbytes is None:
-            return col
-        return col.map(lambda s: str(hashlib.md5(s.encode()).digest()[:nbytes]))
-
+    relabel = (
+        F.col("raw_label")
+        if md5_bytes is None
+        else F.expr(_md5_repr_sql("raw_label", md5_bytes))
+    )
     out = [
         ent_nodes.join(labels, "node")  # entity nodes only
         .select("name", F.lit(0).alias("n"), "label")
@@ -1447,7 +1378,7 @@ def wl_labels(kg: SparkKG, wl_iterations: int, md5_bytes: int | None = 8) -> Dat
             ).alias("raw_label"),
         )
         new_labels = raw.select(
-            "node", _digest_repr(F.col("raw_label")).alias("label")
+            "node", relabel.alias("label")
         ).localCheckpoint(eager=False)
         labels.unpersist()
         labels = new_labels.persist()
@@ -1601,8 +1532,7 @@ def community_labels(kg: SparkKG, iterations: int = 5) -> DataFrame:
 
 
 def louvain_labels(
-    kg: SparkKG, sweeps: int = 8, max_levels: int = 4,
-    verbose: bool = False, dampen: bool = False,
+    kg: SparkKG, sweeps: int = 8, max_levels: int = 4, dampen: bool = False,
 ) -> DataFrame:
     """Distributed Louvain over the undirected entity graph — the
     fidelity-first alternative to :func:`community_labels` for the
@@ -1670,11 +1600,6 @@ def louvain_labels(
     id_map = kg.entity_names().select(nid("name").alias("id"), "name")
     mapping = None  # orig id -> current top-level community
     for _level in range(max_levels):
-        if verbose:
-            import time as _t
-
-            print(f"louvain level={_level} start t={_t.time():.1f}",
-                  flush=True)
         n_nodes = edges.select("a").distinct().count()
         m2 = edges.agg(F.sum("w")).first()[0] or 1
         deg = hard_local_checkpoint(
@@ -1701,8 +1626,6 @@ def louvain_labels(
         damp_on = False  # dampener engages only on a cycle signature
         last_moved: dict[int, int] = {}  # parity -> previous moved count
         for sweep in range(sweeps):
-            if verbose:
-                t_sw = _t.time()
             lab_b = labels.withColumnRenamed("id", "b").withColumnRenamed(
                 "community", "_cb"
             )
@@ -1804,22 +1727,8 @@ def louvain_labels(
             # scan over the just-checkpointed partitions (no shuffle),
             # and it is what keeps the sweep budget from being paid in
             # full on already-converged levels
-            t_ck = _t.time() if verbose else 0
             moved = stepped.where("_moved").count()
             labels = stepped.select("id", "community")
-            if verbose:
-                nplan = len(
-                    stepped._jdf.queryExecution()
-                    .analyzed()
-                    .numberedTreeString()
-                    .splitlines()
-                )
-                print(
-                    f"louvain level={_level} sweep={sweep} moved={moved} "
-                    f"ckpt={t_ck - t_sw:.2f}s cnt={_t.time() - t_ck:.2f}s "
-                    f"plan={nplan}",
-                    flush=True,
-                )
             if moved == 0:
                 settled += 1
                 # under an ENGAGED dampener a zero-move half-sweep can
@@ -1836,22 +1745,8 @@ def louvain_labels(
                 par = sweep % 2
                 if moved > 0 and last_moved.get(par) == moved:
                     damp_on = True
-                    if verbose:
-                        print(
-                            f"louvain level={_level} sweep={sweep} "
-                            f"dampener engaged (moved={moved} repeated)",
-                            flush=True,
-                        )
                 last_moved[par] = moved
-        if verbose:
-            import time as _t
-
-            print(f"louvain level={_level} sweeps-done t={_t.time():.1f}",
-                  flush=True)
         n_comms = labels.select("community").distinct().count()
-        if verbose:
-            print(f"louvain level={_level} n_comms={n_comms} "
-                  f"t={_t.time():.1f}", flush=True)
         mapping = hard_local_checkpoint(
             labels
             if mapping is None
@@ -1862,9 +1757,6 @@ def louvain_labels(
                 mapping["community"] == F.col("_sup"),
             ).select("id", F.col("_next").alias("community"))
         )
-        if verbose:
-            print(f"louvain level={_level} mapping-ckpt t={_t.time():.1f}",
-                  flush=True)
         if n_comms == n_nodes or _level == max_levels - 1:
             break
         # aggregate: communities become super-nodes; intra-community
@@ -1881,9 +1773,6 @@ def louvain_labels(
             .groupBy(F.col("_ca").alias("a"), F.col("_cb").alias("b"))
             .agg(F.sum("w").alias("w"))
         )
-        if verbose:
-            print(f"louvain level={_level} edges-agg t={_t.time():.1f}",
-                  flush=True)
     out = id_map.join(mapping, "id", "left").select(
         "name", F.coalesce("community", "id").alias("community")
     )
@@ -1914,13 +1803,11 @@ def _community_cached(
     unpersisted it BEFORE the caller ever materialized the returned
     lazy walks (the r6 dead-persist defect, same as the sampled
     walkers' edge table)."""
-    cache = _kg_walk_cache(kg)
-    key = ("community", algorithm, int(lpa_iterations))
-    if key not in cache:
-        cache[key] = _community_partition(
-            kg, algorithm, lpa_iterations
-        ).persist()
-    return cache[key]
+    return _kg_cached(
+        kg,
+        ("community", algorithm, int(lpa_iterations)),
+        lambda: _community_partition(kg, algorithm, lpa_iterations).persist(),
+    )
 
 
 def community_walks(
@@ -2079,23 +1966,7 @@ def community_sampled_walks(
         else:
             joined = walks.join(norm, walks["cur"] == norm["src"], "left")
             other = F.col("dst")
-        if portable_hash:
-            u = _md5_uniform(
-                F.col("entity"), F.col("walk_id"), F.lit(depth),
-                F.col("pred"), other, F.lit(seed),
-            )
-        else:
-            u = (
-                F.pmod(
-                    F.xxhash64(
-                        F.col("entity"), F.col("walk_id"), F.lit(depth),
-                        F.col("pred"), other, F.lit(seed),
-                    ),
-                    F.lit(2**31 - 1),
-                ).cast("double")
-                + F.lit(1.0)
-            ) / F.lit(float(2**31))
-        race_key = -F.log(u) / F.col("norm_weight")
+        race_key = _race_key(other, depth, seed, portable_hash)
         picked = joined.groupBy("entity", "walk_id").agg(
             F.min_by(
                 F.struct(F.col("pred").alias("p"), other.alias("o")),

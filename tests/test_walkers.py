@@ -147,6 +147,68 @@ class TestCanonicalize:
             for i, tok in enumerate(r["walk"]):
                 # all LOOP vertices are seeds → nothing hashed
                 assert tok.startswith(URL)
+        # 600 extra non-KG seed names: the one Catalyst path serves the
+        # seed-set size that used to switch to a Python UDF, unchanged
+        raw = bfs_walks(kg_loop, roots, 2)
+        extra = [uri(f"absent_{i}") for i in range(600)]
+        small = walks_set(canonicalize_walks(raw, [uri("Dean")], 8))
+        large = walks_set(canonicalize_walks(raw, [uri("Dean")] + extra, 8))
+        assert large == small
+        assert any(not tok.startswith(URL) for _, w in small for tok in w)
+
+    def test_seed_names_with_quotes_and_backslashes_kept(self, spark):
+        # seed names reach the IN-list verbatim, whatever they contain
+        import hashlib
+
+        odd = ["a\\b", "it's", 'say "hi"', "tab\\t", "\\'"]
+        walk = ["root", "p"]
+        for v in odd:
+            walk += [v, "p"]
+        walks = spark.createDataFrame(
+            [("root", walk[:-1])], "entity string, walk array<string>"
+        )
+        kept = canonicalize_walks(walks, odd, 8).collect()[0]["walk"]
+        assert kept[2::2] == odd
+        hashed = canonicalize_walks(walks, ["root"], 8).collect()[0]["walk"]
+        assert hashed == ["root"] + [
+            tok
+            for v in odd
+            for tok in ("p", str(hashlib.md5(v.encode()).digest()[:8]))
+        ]
+
+    def test_md5_repr_sql_matches_spec_every_escape_branch(self, spark):
+        # each name's 8-byte digest reaches one branch of the Python
+        # bytes repr; the SQL expression must match str(digest[:k])
+        import hashlib
+
+        from pyrdf2vec_spark.walks import _md5_repr, _md5_repr_sql
+
+        branch = {
+            "v0": lambda d: any(b >= 0x7F for b in d),
+            "v4": lambda d: 0x5C in d,  # backslash
+            "v6": lambda d: 0x0A in d,  # \n
+            "v22": lambda d: 0x27 in d and 0x22 not in d,  # b"..." quoting
+            "v70": lambda d: 0x0D in d,  # \r
+            "v84": lambda d: 0x09 in d,  # \t
+            "v2549": lambda d: 0x27 in d and 0x22 in d,  # both quotes
+        }
+        for name, reaches in branch.items():
+            assert reaches(hashlib.md5(name.encode()).digest()[:8]), name
+        names = spark.createDataFrame(
+            [(n,) for n in branch], "name string"
+        )
+        widths = (1, 8, 16)
+        got = names.select(
+            "name",
+            *[
+                F.expr(_md5_repr_sql("name", k)).alias(f"r{k}")
+                for k in widths
+            ],
+        ).collect()
+        assert len(got) == len(branch)
+        for r in got:
+            for k in widths:
+                assert r[f"r{k}"] == _md5_repr(r["name"], k), (r["name"], k)
 
     def test_md5_none_passthrough(self, kg_loop, roots):
         raw = bfs_walks(kg_loop, roots, 1)
@@ -285,6 +347,29 @@ class TestCanonicalize:
             )
         )
         assert r3 == composed
+
+        # bfs_encoded_walks' seeded integer edge table takes the same
+        # policy, and its decoded corpus stays the canonical one
+        def decoded(seeds):
+            enc, vocab = bfs_encoded_walks(
+                kg_loop, roots, 2, md5_bytes=8, keep_root=True,
+                seed_entities=seeds,
+            )
+            lut = {r["tid"]: r["token"] for r in vocab.collect()}
+            return {
+                (lut[r["root"]], tuple(lut[t] for t in r["walk"]))
+                for r in enc.collect()
+            }
+
+        d1 = decoded(seeds_a)
+        first = cache[("edges_ids_seeded", 8)][0]
+        d2 = decoded(seeds_a)
+        assert cache[("edges_ids_seeded", 8)][0] is first
+        assert d2 == d1 == r1
+        d3 = decoded(seeds_b)
+        assert cache[("edges_ids_seeded", 8)][0] is not first
+        assert not first.storageLevel.useMemory  # evicted = unpersisted
+        assert d3 == r3
 
     def test_hash_prefix_invariant(self, kg_chain, roots):
         # tests/walkers/test_random.py:110-113 — hashed objects repr
@@ -560,6 +645,15 @@ class TestWL:
             ).digest()[:8]
         )
         assert labs[uri("Bob")] == expect
+
+    def test_labels_without_digest_keep_raw_label(self, kg_loop):
+        # md5_bytes=None: label_n is the raw '-'-joined label itself
+        labs = {
+            r["name"]: r["label"]
+            for r in wl_labels(kg_loop, 1, md5_bytes=None).collect()
+            if r["n"] == 1
+        }
+        assert labs[uri("Bob")] == f"{uri('Bob')}-{uri('knows')}"
 
     def test_wl_walks_counts(self, kg_loop, roots):
         # walk count grows with iterations but stays bounded by
