@@ -1,38 +1,69 @@
-"""Entity canonicalization: MinHash-LSH blocking + iterative
-connected-components merge (north rule; no reference analogue — the
-reference assumes pre-canonical URIs).
+"""Entity canonicalization: exact-key blocking, fuzzy matching on the
+residual, connected components only when the residual links anything
+(north rule; no reference analogue — the reference assumes
+pre-canonical URIs).
 
-Pipeline: surface forms → char-ngram shingles → MinHash band signatures
-(deterministic salted-md5 min-hashing, engine-independent) → candidate
-pairs via band-bucket self-join → verified by exact Jaccard → union-find
-via alternating large-star/small-star DataFrame self-joins (Kiveris et al.,
-"Connected Components in MapReduce and Beyond", SOCC'14 — the standard
-shuffle-bounded CC algorithm) → canonical id = min member of each cluster.
+``canonical_mapping`` splits entity resolution the way SparkER (EDBT
+2019) does — blocking, then a pruned candidate comparison, then
+clustering:
 
-Scale notes: banding keeps the candidate join linear in data size (no
-all-pairs); the star operations are self-joins on salted-skew-safe keys
-(AQE skew handling on); each CC iteration halves tree heights, so
-iterations = O(log n) with an early-exit convergence check.
+1. **Exact blocking.** Every surface form is keyed by its normalized
+   string (lower-case, non-alphanumeric runs → one space, trimmed), and
+   each key's representative is its min surface. One aggregation, no
+   iteration: ``Person_17``, ``person 17`` and ``PERSON-17`` merge here.
+2. **Residual fuzzy matching, one representative per key.** Each row
+   computes its char n-gram shingle array and its MinHash signature in
+   one projection (salted-md5 shingle hashes, integer universal-hash
+   permutations: no explode, no shuffle). The band self-join is blocked
+   on ``(digit runs, band_idx, band_sig)``: forms whose digit runs
+   differ are never compared, so ``person 11`` never meets
+   ``person 111`` however alike their shingles are. Buckets above
+   200 members are dropped (skew valve), and each pair is verified by
+   the exact Jaccard of its two shingle arrays.
+3. **Clustering only when needed.** Alternating large-star/small-star
+   connected components (Kiveris et al., "Connected Components in
+   MapReduce and Beyond", SOCC'14) run only when verified pairs exist;
+   canonical id = min member of each cluster.
+
+``lsh_pairs`` (MinHash-LSH over any ``(name, h)`` shingle-hash table,
+posting-list verification) and ``connected_components`` are general
+building blocks that ``functions/dedup.py`` uses for documents;
+``candidate_pairs`` runs ``lsh_pairs`` over surface-form shingles.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from pyrdf2vec_spark.session import hard_local_checkpoint
 
 
+def _norm_sql(col: str) -> str:
+    """SQL for the normalized surface: lower-case, every
+    non-alphanumeric run turned into one space, trimmed."""
+    return (
+        f"trim(regexp_replace(lower(regexp_replace({col}, "
+        f"'[^A-Za-z0-9]+', ' ')), '\\\\s+', ' '))"
+    )
+
+
+def _shingles_sql(text: str, n: int) -> str:
+    """SQL for the distinct char n-grams of ``text``."""
+    return (
+        f"array_distinct(transform(sequence(1, greatest(1, length({text}) - {n - 1})), "
+        f"i -> substring({text}, i, {n})))"
+    )
+
+
 def _shingle_col(col: str, n: int):
-    """Normalized char n-gram shingle set — Catalyst-only (sequence +
-    transform + substring), no UDF."""
-    norm = (
-        f"concat(' ', trim(regexp_replace(lower(regexp_replace({col}, "
-        f"'[^A-Za-z0-9]+', ' ')), '\\\\s+', ' ')), ' ')"
-    )
-    return F.expr(
-        f"array_distinct(transform(sequence(1, greatest(1, length({norm}) - {n - 1})), "
-        f"i -> substring({norm}, i, {n})))"
-    )
+    """Normalized char n-gram shingle set (space-padded, so word starts
+    and ends are shingles too) — Catalyst-only, no UDF."""
+    return F.expr(_shingles_sql(f"concat(' ', {_norm_sql(col)}, ' ')", n))
+
+
+def _shingle_hash(s: Column) -> Column:
+    """60-bit integer hash of one shingle (the first 15 md5 hex digits)."""
+    return F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("bigint")
 
 
 # Mersenne prime 2^31-1: universal-hash modulus for min-hash permutations
@@ -53,6 +84,23 @@ def _hash_params(num_hashes: int, seed: int = 42) -> list[tuple[int, int]]:
     return out
 
 
+def _permuted(hp: Column, a: int, b: int) -> Column:
+    """h_k of a shingle hash already reduced mod P."""
+    return F.pmod(F.lit(a) * hp + F.lit(b), F.lit(_P))
+
+
+def _band_keys(mins: list[Column], band_size: int) -> Column:
+    """LSH bucketing keys: per band, the ``|``-joined min-hashes of
+    ``band_size`` consecutive permutations (``posexplode`` it into
+    ``(band_idx, band_sig)``)."""
+    return F.array(
+        *[
+            F.concat_ws("|", *mins[b * band_size : (b + 1) * band_size])
+            for b in range(len(mins) // band_size)
+        ]
+    )
+
+
 def shingle_hashes(
     surfaces: DataFrame, col: str = "name", n: int = 3
 ) -> DataFrame:
@@ -63,12 +111,7 @@ def shingle_hashes(
         surfaces.select(F.col(col).alias("name"))
         .distinct()
         .select("name", F.explode(_shingle_col("name", n)).alias("s"))
-        .select(
-            "name",
-            F.conv(F.substring(F.md5("s"), 1, 15), 16, 10)
-            .cast("bigint")
-            .alias("h"),
-        )
+        .select("name", _shingle_hash(F.col("s")).alias("h"))
         .distinct()
     )
 
@@ -77,43 +120,12 @@ def minhash_signatures(
     hashes: DataFrame, num_hashes: int = 12, seed: int = 42
 ) -> DataFrame:
     """One aggregation computes every permutation's min: (name, h0..hk)."""
-    params = _hash_params(num_hashes, seed)
     hp = F.pmod(F.col("h"), F.lit(_P))
     return hashes.groupBy("name").agg(
         *[
-            F.min(F.pmod(F.lit(a) * hp + F.lit(b), F.lit(_P))).alias(f"h{k}")
-            for k, (a, b) in enumerate(params)
+            F.min(_permuted(hp, a, b)).alias(f"h{k}")
+            for k, (a, b) in enumerate(_hash_params(num_hashes, seed))
         ]
-    )
-
-
-def minhash_bands(
-    surfaces: DataFrame,
-    col: str = "name",
-    n: int = 3,
-    num_hashes: int = 12,
-    band_size: int = 2,
-) -> DataFrame:
-    """(name, band_idx, band_sig): per band, the concatenated min-hashes
-    of ``band_size`` permutations — the LSH bucketing key."""
-    sigs = minhash_signatures(shingle_hashes(surfaces, col, n), num_hashes)
-    n_bands = num_hashes // band_size
-    return sigs.select(
-        "name",
-        F.posexplode(
-            F.array(
-                *[
-                    F.concat_ws(
-                        "|",
-                        *[
-                            F.col(f"h{b * band_size + j}")
-                            for j in range(band_size)
-                        ],
-                    )
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("band_idx", "band_sig"),
     )
 
 
@@ -157,19 +169,10 @@ def lsh_pairs(
     hashes = shingle_hash_df.persist()
     sizes = hashes.groupBy("name").agg(F.count("*").alias("n_sh"))
     sigs = minhash_signatures(hashes, num_hashes)
-    n_bands = num_hashes // band_size
     bands = sigs.select(
         "name",
         F.posexplode(
-            F.array(
-                *[
-                    F.concat_ws(
-                        "|",
-                        *[F.col(f"h{b * band_size + j}") for j in range(band_size)],
-                    )
-                    for b in range(n_bands)
-                ]
-            )
+            _band_keys([F.col(f"h{k}") for k in range(num_hashes)], band_size)
         ).alias("band_idx", "band_sig"),
     )
     sized = bands.withColumn(
@@ -282,6 +285,59 @@ def connected_components(
     return out
 
 
+def _residual_pairs(
+    reps: DataFrame,
+    n: int,
+    num_hashes: int,
+    band_size: int,
+    jaccard_threshold: float,
+) -> DataFrame:
+    """(a, b) pairs of key representatives with equal digit runs, a
+    shared LSH band and shingle Jaccard ≥ ``jaccard_threshold``.
+
+    ``reps(key, rep)`` holds one row per normalized key. The shingle
+    array and the min-hashes are per-row array functions, so the only
+    shuffles are the band bucketing, the self-join and the pair
+    ``distinct``."""
+    sig = reps.select(
+        "rep",
+        F.expr("array_join(regexp_extract_all(key, '[0-9]+', 0), ' ')").alias(
+            "digits"
+        ),
+        F.expr(_shingles_sql("concat(' ', key, ' ')", n)).alias("sh"),
+    ).withColumn(
+        "hp",
+        F.transform("sh", lambda s: F.pmod(_shingle_hash(s), F.lit(_P))),
+    )
+
+    def min_hash(a: int, b: int) -> Column:
+        return F.array_min(F.transform("hp", lambda x: _permuted(x, a, b)))
+
+    mins = [min_hash(a, b) for a, b in _hash_params(num_hashes)]
+    block = ["digits", "band_idx", "band_sig"]
+    bands = sig.select(
+        "rep",
+        "digits",
+        "sh",
+        F.posexplode(_band_keys(mins, band_size)).alias("band_idx", "band_sig"),
+    )
+    # skew valve: buckets above lsh_pairs' default max_bucket are dropped
+    sized = bands.withColumn(
+        "bucket_n", F.count("*").over(Window.partitionBy(*block))
+    ).where(F.col("bucket_n") <= 200)
+    left = sized.select(*block, F.col("rep").alias("a"), F.col("sh").alias("sa"))
+    right = sized.select(*block, F.col("rep").alias("b"), F.col("sh").alias("sb"))
+    jaccard = F.size(F.array_intersect("sa", "sb")) / F.size(
+        F.array_union("sa", "sb")
+    )
+    return (
+        left.join(right, block)
+        .where((F.col("a") < F.col("b")) & (jaccard >= jaccard_threshold))
+        .select("a", "b")
+        .distinct()
+    )
+
+
 def canonical_mapping(
     surfaces: DataFrame,
     col: str = "name",
@@ -293,15 +349,33 @@ def canonical_mapping(
     band_size: int = 2,
     n: int = 3,
 ) -> DataFrame:
-    """surface form → canonical id (min member of its similarity
-    cluster). Singletons map to themselves."""
-    pairs = candidate_pairs(
-        surfaces, col, n, num_hashes, band_size, jaccard_threshold
+    """surface form → canonical id (min member of its cluster).
+    Singletons map to themselves.
+
+    Surfaces with one normalized key form one cluster; clusters whose
+    representatives are fuzzy pairs (equal digit runs, shingle Jaccard
+    ≥ ``jaccard_threshold``) are merged by connected components, which
+    run only when such a pair exists."""
+    groups = (
+        surfaces.select(F.col(col).alias("name"))
+        .groupBy(F.expr(_norm_sql("name")).alias("key"))
+        .agg(F.min("name").alias("rep"), F.collect_set("name").alias("names"))
     )
-    comp = connected_components(pairs.select("a", "b"))
-    all_names = surfaces.select(F.col(col).alias("name")).distinct()
-    return all_names.join(comp, "name", "left").select(
-        "name", F.coalesce("component", "name").alias("canonical")
+    # not persisted: the mapping is re-derived from the input, so AQE
+    # coalesces its final shuffle and a stage write stays one file
+    keyed = groups.select("rep", F.explode("names").alias("name"))
+    pairs = _residual_pairs(
+        groups.select("key", "rep"),
+        n,
+        num_hashes,
+        band_size,
+        jaccard_threshold,
+    ).localCheckpoint(eager=True)
+    if pairs.isEmpty():
+        return keyed.select("name", F.col("rep").alias("canonical"))
+    comp = connected_components(pairs).withColumnRenamed("name", "rep")
+    return keyed.join(comp, "rep", "left").select(
+        "name", F.coalesce("component", "rep").alias("canonical")
     )
 
 

@@ -73,9 +73,11 @@ def _seeds(entities: DataFrame) -> DataFrame:
 
 def _seed_fingerprint(entities: DataFrame) -> tuple:
     """Order-independent fingerprint of a seed set (one tiny agg job):
-    (count, exact decimal sum of xxhash64). Keys the one-live-overlay
-    caches so repeat calls with the SAME seeds reuse a cached |E|-row
-    table instead of rebuilding it."""
+    (count, exact decimal sum of xxhash64, xor of a differently seeded
+    xxhash64). Keys the one-live-overlay caches so repeat calls with
+    the SAME seeds reuse a cached |E|-row table instead of rebuilding
+    it; a different seed set has to collide in both hashes at once to
+    be mistaken for a cached one."""
     row = (
         _seeds(entities)
         .agg(
@@ -83,10 +85,17 @@ def _seed_fingerprint(entities: DataFrame) -> tuple:
             # decimal(38,0): a bigint sum of 64-bit hashes overflows
             # under ANSI; decimal is exact and order-independent
             F.sum(F.xxhash64("entity").cast("decimal(38,0)")).alias("h"),
+            # a leading constant column re-seeds the hash chain: an
+            # independent 64-bit hash of each entity
+            F.bit_xor(F.xxhash64(F.lit(1), "entity")).alias("x"),
         )
         .first()
     )
-    return (row["n"], None if row["h"] is None else int(row["h"]))
+    return (
+        row["n"],
+        None if row["h"] is None else int(row["h"]),
+        row["x"],
+    )
 
 
 def _kg_walk_cache(kg: SparkKG) -> dict:
@@ -682,6 +691,14 @@ def bfs_canonical_walks(
     direction) by :func:`_kg_cached` — with ``seed_entities`` as the
     one live seeded overlay, keyed by a fingerprint of the seed set
     (a different seed set evicts the previous overlay; see there).
+
+    Lifetime: one seeded overlay lives per KG and key. A call with a
+    different seed set evicts (unpersists) the overlay that an earlier
+    result was built from; evaluating that still-lazy earlier result
+    afterwards silently rebuilds the |E|-row tokenized edge table
+    (correct output, surprise cost). Materialize a seeded result
+    (persist + count, or write it) before a call with other seeds if
+    both are needed.
     """
     if md5_bytes is None:
         return bfs_walks(kg, entities, max_depth, is_reverse=is_reverse)
@@ -865,6 +882,14 @@ def bfs_encoded_walks(
     table are cached per KG per md5 width by :func:`_kg_cached` — with
     ``seed_entities`` the edge table is the one live seeded overlay,
     keyed by a fingerprint of the seed set (see there).
+
+    Lifetime: one seeded overlay lives per KG and key. A call with a
+    different seed set evicts (unpersists) the overlay that an earlier
+    result was built from; evaluating that still-lazy earlier result
+    afterwards silently rebuilds the |E|-row tokenized edge table
+    (correct output, surprise cost). Materialize a seeded result
+    (persist + count, or write it) before a call with other seeds if
+    both are needed.
     """
     idx, n_v = indexed_name_table(kg, md5_bytes)
     e = kg.edges
@@ -1034,6 +1059,19 @@ def dfs_canonical_walks(
     with the same seed rule (differentially tested); DFS output carries
     genuine duplicates by design (random.py:103-117), so the final
     dropDuplicates stays.
+
+    Caching: with ``md5_bytes`` set, the tokenized edge-weight table
+    of each direction and sampler config is a seeded overlay of
+    :func:`_kg_cached`, keyed by the md5 width and a fingerprint of the
+    seed set (``seed_entities``, else ``entities``).
+
+    Lifetime: one seeded overlay lives per KG and key. A call with a
+    different seed set evicts (unpersists) the overlay that an earlier
+    result was built from; evaluating that still-lazy earlier result
+    afterwards silently rebuilds the |E|-row tokenized edge table
+    (correct output, surprise cost). Materialize a seeded result
+    (persist + count, or write it) before a call with other seeds if
+    both are needed.
     """
     toks = fpr = None
     if md5_bytes is not None:

@@ -93,6 +93,77 @@ class TestLSH:
         assert all("zzzzzzzz" not in p for p in got)
 
 
+class TestBlockedMapping:
+    """Exact-key blocking, digit-blocked fuzzy residual, and connected
+    components only when the residual has verified pairs."""
+
+    def test_distinct_digit_runs_never_merge(self, spark):
+        ids = [
+            "person_11", "person_111", "person_1111",
+            "person_100", "person_1000", "person_10000",
+            "person_116", "person_1116",
+        ]
+        planted = ["Person_17", "person 17", "PERSON-17", "Org_3", "org 3"]
+        surfaces = spark.createDataFrame(
+            [(n,) for n in ids + planted], "name string"
+        )
+        m = {r["name"]: r["canonical"] for r in canonical_mapping(surfaces).collect()}
+        assert len(m) == len(ids) + len(planted)
+        for n in ids:
+            assert m[n] == n
+        assert m["Person_17"] == m["person 17"] == m["PERSON-17"] == "PERSON-17"
+        assert m["Org_3"] == m["org 3"] == "Org_3"
+
+    def test_fuzzy_chain_resolves_to_min_member(self, spark, monkeypatch):
+        from pyrdf2vec_spark import canon
+
+        calls = []
+
+        def counted(edges, *args, **kwargs):
+            calls.append(1)
+            return connected_components(edges, *args, **kwargs)
+
+        monkeypatch.setattr(canon, "connected_components", counted)
+        # shingle Jaccard: a~b 0.73, b~c 0.73, a~c 0.52 — a chain of
+        # three key groups with digit runs "5"; "... 6" is closer to a
+        # (0.81) than b is, but its digit run differs
+        chain = [
+            "Northwind_Traders-5", "northwind traders 5",
+            "northwind tradurs 5", "northwynd tradurs 5",
+        ]
+        surfaces = spark.createDataFrame(
+            [(n,) for n in chain + ["northwind traders 6"]], "name string"
+        )
+        m = {
+            r["name"]: r["canonical"]
+            for r in canonical_mapping(surfaces, jaccard_threshold=0.7).collect()
+        }
+        assert calls
+        assert {m[n] for n in chain} == {min(chain)}
+        assert m["northwind traders 6"] == "northwind traders 6"
+
+    def test_exact_key_variants_skip_connected_components(
+        self, spark, monkeypatch
+    ):
+        from pyrdf2vec_spark import canon
+
+        def boom(*args, **kwargs):
+            raise AssertionError("connected_components ran without pairs")
+
+        monkeypatch.setattr(canon, "connected_components", boom)
+        surfaces = spark.createDataFrame(
+            [("Person_17",), ("person 17",), ("PERSON-17",), ("city 4",)],
+            "name string",
+        )
+        m = {r["name"]: r["canonical"] for r in canonical_mapping(surfaces).collect()}
+        assert m == {
+            "Person_17": "PERSON-17",
+            "person 17": "PERSON-17",
+            "PERSON-17": "PERSON-17",
+            "city 4": "city 4",
+        }
+
+
 class TestApplyMapping:
     def test_triples_rewritten(self, spark):
         triples = spark.createDataFrame(

@@ -68,6 +68,21 @@ class TestPipeline:
         t2 = {tuple(r) for r in p2.kg_.edges.collect()}
         assert t1 != t2
 
+    def test_canon_stage_writes_one_file(self, spark, transcripts, tmp_path):
+        # the canonical mapping is small: AQE coalesces its last shuffle,
+        # so the stage write is one parquet file, not one per partition
+        ck = str(tmp_path / "ckpt3")
+        RDF2VecPipeline(max_depth=1, vector_size=8, checkpoint_dir=ck).build_graph(
+            transcripts
+        )
+        stages = [d for d in os.listdir(ck) if d.startswith("canon-")]
+        assert len(stages) == 1
+        files = [
+            f for f in os.listdir(os.path.join(ck, stages[0]))
+            if f.endswith(".parquet")
+        ]
+        assert len(files) == 1
+
     def test_missing_entities_raise(self, spark, transcripts):
         pipe = RDF2VecPipeline(max_depth=1)
         kg = pipe.build_graph(transcripts)
