@@ -11,24 +11,28 @@ clustering:
    string (lower-case, non-alphanumeric runs → one space, trimmed), and
    each key's representative is its min surface. One aggregation, no
    iteration: ``Person_17``, ``person 17`` and ``PERSON-17`` merge here.
-2. **Residual fuzzy matching, one representative per key.** Each row
-   computes its char n-gram shingle array and its MinHash signature in
-   one projection (salted-md5 shingle hashes, integer universal-hash
-   permutations: no explode, no shuffle). The band self-join is blocked
-   on ``(digit runs, band_idx, band_sig)``: forms whose digit runs
-   differ are never compared, so ``person 11`` never meets
-   ``person 111`` however alike their shingles are. Buckets above
-   200 members are dropped (skew valve), and each pair is verified by
-   the exact Jaccard of its two shingle arrays.
+2. **Residual fuzzy matching, one representative per key.**
+   ``lsh_pairs`` over the key's char n-gram shingle hashes, blocked on
+   the key's digit runs: forms whose digit runs differ are never
+   compared, so ``person 11`` never meets ``person 111`` however alike
+   their shingles are.
 3. **Clustering only when needed.** Alternating large-star/small-star
    connected components (Kiveris et al., "Connected Components in
    MapReduce and Beyond", SOCC'14) run only when verified pairs exist;
    canonical id = min member of each cluster.
 
-``lsh_pairs`` (MinHash-LSH over any ``(name, h)`` shingle-hash table,
-posting-list verification) and ``connected_components`` are general
-building blocks that ``functions/dedup.py`` uses for documents;
-``candidate_pairs`` runs ``lsh_pairs`` over surface-form shingles.
+``lsh_pairs`` is the one MinHash-LSH core. It takes one row per set —
+``(name, block, h)``, ``h`` the set's 60-bit md5 shingle hashes — and
+compares rows only within equal ``block`` values, so blocking is a
+column, not an option. Each row's min-hashes (integer universal-hash
+permutations of ``h``) and band keys are one
+projection (no explode, no groupBy); buckets above ``max_bucket`` rows
+are dropped, and pairs are verified by the exact Jaccard of their hash
+arrays. Three callers: ``canonical_mapping`` (blocked on digit runs),
+``candidate_pairs`` (every surface form, one constant block) and
+``functions/dedup.minhash_dedup_pairs`` (word shingles of documents,
+one constant block). ``connected_components`` is shared with
+``functions/dedup.py`` too.
 """
 
 from __future__ import annotations
@@ -48,22 +52,22 @@ def _norm_sql(col: str) -> str:
 
 
 def _shingles_sql(text: str, n: int) -> str:
-    """SQL for the distinct char n-grams of ``text``."""
+    """SQL for the distinct char n-grams of ``text`` padded with one
+    space on each side, so word starts and ends are shingles too."""
+    padded = f"concat(' ', {text}, ' ')"
     return (
-        f"array_distinct(transform(sequence(1, greatest(1, length({text}) - {n - 1})), "
-        f"i -> substring({text}, i, {n})))"
+        f"array_distinct(transform(sequence(1, greatest(1, length({padded}) - {n - 1})), "
+        f"i -> substring({padded}, i, {n})))"
     )
 
 
-def _shingle_col(col: str, n: int):
-    """Normalized char n-gram shingle set (space-padded, so word starts
-    and ends are shingles too) — Catalyst-only, no UDF."""
-    return F.expr(_shingles_sql(f"concat(' ', {_norm_sql(col)}, ' ')", n))
-
-
-def _shingle_hash(s: Column) -> Column:
-    """60-bit integer hash of one shingle (the first 15 md5 hex digits)."""
-    return F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("bigint")
+def _shingle_hashes(shingles: Column) -> Column:
+    """The 60-bit integer hashes (first 15 md5 hex digits) of a
+    shingle array: the ``h`` column ``lsh_pairs`` takes."""
+    return F.transform(
+        shingles,
+        lambda s: F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("bigint"),
+    )
 
 
 # Mersenne prime 2^31-1: universal-hash modulus for min-hash permutations
@@ -84,48 +88,63 @@ def _hash_params(num_hashes: int, seed: int = 42) -> list[tuple[int, int]]:
     return out
 
 
-def _permuted(hp: Column, a: int, b: int) -> Column:
-    """h_k of a shingle hash already reduced mod P."""
-    return F.pmod(F.lit(a) * hp + F.lit(b), F.lit(_P))
+def _band_keys(mins: list[str], band_size: int) -> str:
+    """SQL for the LSH bucketing keys: per band, the ``|``-joined
+    min-hashes of ``band_size`` consecutive permutations (``posexplode``
+    it into ``(band_idx, band_sig)``)."""
+    bands = [
+        f"concat_ws('|', {', '.join(mins[b * band_size : (b + 1) * band_size])})"
+        for b in range(len(mins) // band_size)
+    ]
+    return f"array({', '.join(bands)})"
 
 
-def _band_keys(mins: list[Column], band_size: int) -> Column:
-    """LSH bucketing keys: per band, the ``|``-joined min-hashes of
-    ``band_size`` consecutive permutations (``posexplode`` it into
-    ``(band_idx, band_sig)``)."""
-    return F.array(
-        *[
-            F.concat_ws("|", *mins[b * band_size : (b + 1) * band_size])
-            for b in range(len(mins) // band_size)
-        ]
-    )
-
-
-def shingle_hashes(
-    surfaces: DataFrame, col: str = "name", n: int = 3
+def lsh_pairs(
+    sets: DataFrame,
+    num_hashes: int = 12,
+    band_size: int = 2,
+    jaccard_threshold: float = 0.5,
+    max_bucket: int = 200,
 ) -> DataFrame:
-    """(name, h): one 60-bit integer hash per distinct char n-gram
-    shingle of the normalized surface. ONE md5 per shingle — the k
-    min-hash permutations are integer universal hashes over ``h``."""
+    """MinHash-LSH pairs over ``sets(name, block, h)``: lazy
+    ``(a, b, jaccard)`` with ``a < b`` and exact Jaccard ≥
+    ``jaccard_threshold``.
+
+    ``h`` is a row's shingle hashes (``array<bigint>``, see
+    ``_shingle_hashes``; min-hashes and the set functions ignore
+    repeats); rows are compared only when their ``block``
+    values are equal (pass a constant not to block). One projection
+    computes each row's min-hashes and band keys (no explode, no
+    groupBy); buckets above ``max_bucket`` rows are dropped (skew and
+    garbage-collision valve), so the band self-join never goes
+    quadratic; each pair is verified by the Jaccard of its two hash
+    arrays. The only shuffles are the bucket count, the self-join and
+    the pair ``distinct``."""
+    mins = [
+        f"array_min(transform(h, x -> pmod({a} * pmod(x, {_P}) + {b}, {_P})))"
+        for a, b in _hash_params(num_hashes)
+    ]
+    key = ["block", "band_idx", "band_sig"]
+    bands = sets.selectExpr(
+        "name",
+        "block",
+        "h",
+        f"posexplode({_band_keys(mins, band_size)}) AS (band_idx, band_sig)",
+    )
+    sized = bands.withColumn(
+        "bucket_n", F.count("*").over(Window.partitionBy(*key))
+    ).where(F.col("bucket_n") <= max_bucket)
+    left = sized.select(*key, F.col("name").alias("a"), F.col("h").alias("ha"))
+    right = sized.select(*key, F.col("name").alias("b"), F.col("h").alias("hb"))
+    jaccard = F.size(F.array_intersect("ha", "hb")) / F.size(
+        F.array_union("ha", "hb")
+    )
     return (
-        surfaces.select(F.col(col).alias("name"))
+        left.join(right, key)
+        .where(F.col("a") < F.col("b"))
+        .select("a", "b", jaccard.alias("jaccard"))
+        .where(F.col("jaccard") >= jaccard_threshold)
         .distinct()
-        .select("name", F.explode(_shingle_col("name", n)).alias("s"))
-        .select("name", _shingle_hash(F.col("s")).alias("h"))
-        .distinct()
-    )
-
-
-def minhash_signatures(
-    hashes: DataFrame, num_hashes: int = 12, seed: int = 42
-) -> DataFrame:
-    """One aggregation computes every permutation's min: (name, h0..hk)."""
-    hp = F.pmod(F.col("h"), F.lit(_P))
-    return hashes.groupBy("name").agg(
-        *[
-            F.min(_permuted(hp, a, b)).alias(f"h{k}")
-            for k, (a, b) in enumerate(_hash_params(num_hashes, seed))
-        ]
     )
 
 
@@ -138,82 +157,18 @@ def candidate_pairs(
     jaccard_threshold: float = 0.5,
     max_bucket: int = 200,
 ) -> DataFrame:
-    """LSH-blocked candidate pairs over char n-gram shingles, verified
-    by exact shingle Jaccard (entity-surface-form flavor; for documents
-    use word shingles via lsh_pairs + a word-shingle hash table)."""
-    return lsh_pairs(
-        shingle_hashes(surfaces, col, n),
-        num_hashes=num_hashes,
-        band_size=band_size,
-        jaccard_threshold=jaccard_threshold,
-        max_bucket=max_bucket,
-    )
-
-
-def lsh_pairs(
-    shingle_hash_df: DataFrame,
-    num_hashes: int = 12,
-    band_size: int = 2,
-    jaccard_threshold: float = 0.5,
-    max_bucket: int = 200,
-    checkpoint: bool = True,
-) -> DataFrame:
-    """MinHash-LSH blocking + exact-Jaccard verify over ANY
-    (name, h:bigint) shingle-hash table.
-
-    Shape at scale: shingle hashes are computed ONCE and persisted; the
-    band self-join never goes quadratic (buckets above ``max_bucket``
-    are dropped — skew/garbage-collision safety valve); verification is
-    a pair-driven posting-list join on integer hashes, not an
-    array-carrying shuffle."""
-    hashes = shingle_hash_df.persist()
-    sizes = hashes.groupBy("name").agg(F.count("*").alias("n_sh"))
-    sigs = minhash_signatures(hashes, num_hashes)
-    bands = sigs.select(
-        "name",
-        F.posexplode(
-            _band_keys([F.col(f"h{k}") for k in range(num_hashes)], band_size)
-        ).alias("band_idx", "band_sig"),
-    )
-    sized = bands.withColumn(
-        "bucket_n", F.count("*").over(Window.partitionBy("band_idx", "band_sig"))
-    ).where(F.col("bucket_n") <= max_bucket)
-    left = sized.select("band_idx", "band_sig", F.col("name").alias("a"))
-    right = sized.select("band_idx", "band_sig", F.col("name").alias("b"))
-    pairs = (
-        left.join(right, ["band_idx", "band_sig"])
-        .where(F.col("a") < F.col("b"))
-        .select("a", "b")
+    """``lsh_pairs`` over the distinct surface forms' normalized char
+    n-gram shingles, with no blocking: (a, b, jaccard)."""
+    sets = (
+        surfaces.select(F.col(col).alias("name"))
         .distinct()
-        .persist()
-    )
-    pairs.count()  # materialize before the fan-out join
-    # exact Jaccard: |A∩B| via (pair × a-shingles) probe into b's set
-    common = (
-        pairs.join(hashes.withColumnRenamed("name", "a"), "a")
-        .join(hashes.withColumnRenamed("name", "b"), ["b", "h"])
-        .groupBy("a", "b")
-        .agg(F.count("*").alias("common"))
-    )
-    verified = (
-        common.join(sizes.withColumnRenamed("name", "a").withColumnRenamed("n_sh", "na"), "a")
-        .join(sizes.withColumnRenamed("name", "b").withColumnRenamed("n_sh", "nb"), "b")
-        .withColumn(
-            "jaccard",
-            F.col("common") / (F.col("na") + F.col("nb") - F.col("common")),
+        .select(
+            "name",
+            F.lit(0).alias("block"),
+            _shingle_hashes(F.expr(_shingles_sql(_norm_sql("name"), n))).alias("h"),
         )
-        .where(F.col("jaccard") >= jaccard_threshold)
-        .select("a", "b", "jaccard")
     )
-    if not checkpoint:
-        # plan-inspection mode (tools/explain_plans.py): return the
-        # full lazy plan instead of the checkpointed RDD leaf. Caller
-        # owns the persisted inputs' lifetime in this mode.
-        return verified
-    out = verified.localCheckpoint(eager=True)
-    hashes.unpersist()
-    pairs.unpersist()
-    return out
+    return lsh_pairs(sets, num_hashes, band_size, jaccard_threshold, max_bucket)
 
 
 def connected_components(
@@ -285,59 +240,6 @@ def connected_components(
     return out
 
 
-def _residual_pairs(
-    reps: DataFrame,
-    n: int,
-    num_hashes: int,
-    band_size: int,
-    jaccard_threshold: float,
-) -> DataFrame:
-    """(a, b) pairs of key representatives with equal digit runs, a
-    shared LSH band and shingle Jaccard ≥ ``jaccard_threshold``.
-
-    ``reps(key, rep)`` holds one row per normalized key. The shingle
-    array and the min-hashes are per-row array functions, so the only
-    shuffles are the band bucketing, the self-join and the pair
-    ``distinct``."""
-    sig = reps.select(
-        "rep",
-        F.expr("array_join(regexp_extract_all(key, '[0-9]+', 0), ' ')").alias(
-            "digits"
-        ),
-        F.expr(_shingles_sql("concat(' ', key, ' ')", n)).alias("sh"),
-    ).withColumn(
-        "hp",
-        F.transform("sh", lambda s: F.pmod(_shingle_hash(s), F.lit(_P))),
-    )
-
-    def min_hash(a: int, b: int) -> Column:
-        return F.array_min(F.transform("hp", lambda x: _permuted(x, a, b)))
-
-    mins = [min_hash(a, b) for a, b in _hash_params(num_hashes)]
-    block = ["digits", "band_idx", "band_sig"]
-    bands = sig.select(
-        "rep",
-        "digits",
-        "sh",
-        F.posexplode(_band_keys(mins, band_size)).alias("band_idx", "band_sig"),
-    )
-    # skew valve: buckets above lsh_pairs' default max_bucket are dropped
-    sized = bands.withColumn(
-        "bucket_n", F.count("*").over(Window.partitionBy(*block))
-    ).where(F.col("bucket_n") <= 200)
-    left = sized.select(*block, F.col("rep").alias("a"), F.col("sh").alias("sa"))
-    right = sized.select(*block, F.col("rep").alias("b"), F.col("sh").alias("sb"))
-    jaccard = F.size(F.array_intersect("sa", "sb")) / F.size(
-        F.array_union("sa", "sb")
-    )
-    return (
-        left.join(right, block)
-        .where((F.col("a") < F.col("b")) & (jaccard >= jaccard_threshold))
-        .select("a", "b")
-        .distinct()
-    )
-
-
 def canonical_mapping(
     surfaces: DataFrame,
     col: str = "name",
@@ -364,12 +266,15 @@ def canonical_mapping(
     # not persisted: the mapping is re-derived from the input, so AQE
     # coalesces its final shuffle and a stage write stays one file
     keyed = groups.select("rep", F.explode("names").alias("name"))
-    pairs = _residual_pairs(
-        groups.select("key", "rep"),
-        n,
-        num_hashes,
-        band_size,
-        jaccard_threshold,
+    sets = groups.select(
+        F.col("rep").alias("name"),
+        F.expr("array_join(regexp_extract_all(key, '[0-9]+', 0), ' ')").alias(
+            "block"
+        ),
+        _shingle_hashes(F.expr(_shingles_sql("key", n))).alias("h"),
+    )
+    pairs = lsh_pairs(
+        sets, num_hashes, band_size, jaccard_threshold
     ).localCheckpoint(eager=True)
     if pairs.isEmpty():
         return keyed.select("name", F.col("rep").alias("canonical"))

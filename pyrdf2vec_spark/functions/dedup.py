@@ -9,7 +9,7 @@ explode/agg/bitwise pipeline — all shuffle-bounded, no driver loops.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 
 def exact_dedup(documents: DataFrame) -> DataFrame:
@@ -143,58 +143,45 @@ def minhash_dedup_pairs(
     band_size: int = 2,
     jaccard_threshold: float = 0.5,
     shingle_words: int = 3,
-    checkpoint: bool = True,
 ) -> DataFrame:
-    """MinHash+LSH near-dup blocking over document texts — the
-    canonicalization LSH core (integer min-hash permutations,
-    band-bucket join, exact-Jaccard verify) over WORD k-gram shingles
-    (char n-grams are the right unit for short surface forms, word
-    k-grams for documents — far more discriminative).
+    """MinHash+LSH near-dup pairs over document texts — the
+    canonicalization LSH core (``canon.lsh_pairs``: integer min-hash
+    permutations, band-bucket self-join, exact Jaccard of the two
+    shingle-hash arrays) over WORD k-gram shingles (char n-grams are the
+    right unit for short surface forms, word k-grams for documents — far
+    more discriminative), with no blocking.
 
-    Every LSH stage is keyed by the 8-byte representative ``doc_id``
-    (min doc_id per distinct text), NOT the text: the band, pair, and
-    verify joins of lsh_pairs shuffle on their key, and at 100-TB doc
-    scale a full-document join key is real bytes through the exchange —
-    the one text-keyed shuffle left is the initial representative
-    hash-agg (map-side partial), which is unavoidable."""
-    from pyrdf2vec_spark.canon import lsh_pairs
+    Every LSH row is keyed by the 8-byte representative ``doc_id`` (min
+    doc_id per distinct text) and carries the text's shingle hashes,
+    NOT the text: at 100-TB doc scale a full document through the band
+    exchange is real bytes — the one text-keyed shuffle left is the
+    initial representative hash-agg (map-side partial), which is
+    unavoidable. The pairs are lazy: a caller that reads them twice
+    checkpoints them."""
+    from pyrdf2vec_spark.canon import _shingle_hashes, lsh_pairs
 
     docs = documents.groupBy("text").agg(F.min("doc_id").alias("name"))
-    # pin the explode's parallelism: the representative-agg exchange is
-    # small (ids + texts), so AQE coalesces it — to ONE partition at
-    # sf0.1 — and the most CPU-expensive map work in the whole pipeline
-    # (per-text shingle transform + md5) then serializes on a single
-    # core (measured: a 4-7 s single-task stage; the r4 text-keyed
-    # pipeline's equivalent stage ran 32-way). An explicit-N
-    # repartition is the one shuffle origin AQE never coalesces.
+    # pin the per-text work's parallelism: the representative-agg
+    # exchange is small (ids + texts), so AQE coalesces it — to ONE
+    # partition at sf0.1 — and the most CPU-expensive map work in the
+    # whole pipeline (per-text shingle transform + md5 + min-hashes)
+    # then serializes on a single core (measured: a 4-7 s single-task
+    # stage; the r4 text-keyed pipeline's equivalent stage ran 32-way).
+    # An explicit-N repartition is the one shuffle origin AQE never
+    # coalesces.
     docs = docs.repartition(
         documents.sparkSession.sparkContext.defaultParallelism, "name"
     )
-    word_hashes = (
-        docs.select(
-            "name",
-            F.explode(
-                F.expr(
-                    f"array_distinct(transform(sequence(1, greatest(1, "
-                    f"size(split(trim(lower(text)), ' +')) - {shingle_words - 1})), "
-                    f"i -> array_join(slice(split(trim(lower(text)), ' +'), i, {shingle_words}), ' ')))"
-                )
-            ).alias("s"),
-        )
-        .select(
-            "name",
-            F.conv(F.substring(F.md5("s"), 1, 15), 16, 10)
-            .cast("bigint")
-            .alias("h"),
-        )
-        .distinct()
+    sets = docs.select(
+        "name",
+        F.lit(0).alias("block"),
+        _shingle_hashes(_word_shingles(shingle_words)).alias("h"),
     )
     pairs = lsh_pairs(
-        word_hashes,
+        sets,
         num_hashes=num_hashes,
         band_size=band_size,
         jaccard_threshold=jaccard_threshold,
-        checkpoint=checkpoint,
     )
     return pairs.select(
         F.col("a").alias("doc_a"),
@@ -231,7 +218,9 @@ def dedup_components(
         .where(F.col("doc_id") != F.col("rep"))
         .select(F.col("doc_id").alias("a"), F.col("rep").alias("b"))
     )
-    cc = connected_components(near.unionByName(exact), max_iterations)
+    # checkpointed once: connected_components reads its edges twice
+    edges = near.unionByName(exact).localCheckpoint(eager=True)
+    cc = connected_components(edges, max_iterations)
     return (
         documents.select("doc_id")
         .join(cc.withColumnRenamed("name", "doc_id"), "doc_id", "left")

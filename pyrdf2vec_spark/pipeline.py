@@ -176,10 +176,10 @@ class RDF2VecPipeline:
         triples = triples_only(mentions)
         fp = f"{fp}>extract"
         if self.canonicalize:
-            surfaces = (
-                triples.select(F.col("subj").alias("name"))
-                .union(triples.select(F.col("obj").alias("name")))
-                .distinct()
+            # one scan of the extract stage; canonical_mapping's key
+            # aggregation dedups the names
+            surfaces = mentions.select(
+                F.explode(F.array("subj", "obj")).alias("name")
             )
             mapping = self._stage(
                 spark, "canon", fp, lambda: canonical_mapping(surfaces)

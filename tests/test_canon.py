@@ -1,5 +1,11 @@
 """Canonicalization: MinHash-LSH blocking + connected components."""
 
+import hashlib
+import itertools
+import random
+import re
+from collections import defaultdict
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -9,6 +15,48 @@ from pyrdf2vec_spark.canon import (
     canonicalize_triples,
     connected_components,
 )
+
+
+def _h60(s):
+    """60-bit shingle hash: the first 15 md5 hex digits."""
+    return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
+
+
+def _char_hashes(name, n=3):
+    norm = re.sub(r"\s+", " ", re.sub("[^A-Za-z0-9]+", " ", name).lower())
+    t = f" {norm.strip(' ')} "
+    return {_h60(t[i : i + n]) for i in range(max(1, len(t) - n + 1))}
+
+
+def _word_hashes(text, k=3):
+    ws = re.split(" +", text.lower().strip(" "))
+    return {_h60(" ".join(ws[i : i + k])) for i in range(max(1, len(ws) - k + 1))}
+
+
+def _replica_lsh(sets, threshold, num_hashes=12, band_size=2, max_bucket=200):
+    """Pure-Python MinHash-LSH over {name: hash set}: universal-hash
+    min-hashes, ``|``-joined band keys, buckets above ``max_bucket``
+    dropped, exact Jaccard over the distinct hashes."""
+    from pyrdf2vec_spark.canon import _P, _hash_params
+
+    buckets = defaultdict(list)
+    for name, hs in sets.items():
+        mins = [
+            min((a * (h % _P) + b) % _P for h in hs)
+            for a, b in _hash_params(num_hashes)
+        ]
+        for i in range(num_hashes // band_size):
+            band = mins[i * band_size : (i + 1) * band_size]
+            buckets[(i, "|".join(map(str, band)))].append(name)
+    out = set()
+    for members in buckets.values():
+        if len(members) > max_bucket:
+            continue
+        for a, b in itertools.combinations(sorted(members), 2):
+            j = len(sets[a] & sets[b]) / len(sets[a] | sets[b])
+            if j >= threshold:
+                out.add((a, b, j))
+    return out
 
 
 class TestConnectedComponents:
@@ -91,6 +139,61 @@ class TestLSH:
         got = {(r["a"], r["b"]) for r in pairs}
         assert ("abcdefgh", "abcdefgx") in got or ("abcdefgx", "abcdefgh") in got
         assert all("zzzzzzzz" not in p for p in got)
+
+    def test_lsh_core_matches_python_replica(self, spark):
+        from pyrdf2vec_spark.functions.dedup import minhash_dedup_pairs
+
+        # 210 case variants of one string share every band bucket, so
+        # the 200-member valve drops them (and anything banded with them)
+        variants = [
+            "".join(c.upper() if up else c for c, up in zip("abcdefgh", bits))
+            for bits in itertools.product([0, 1], repeat=8)
+        ][:210]
+        names = variants + [
+            "abcdefgx", "northwind traders", "northwind tradurs",
+            "northwynd traders 5", "acme corp 5", "acme corp 6",
+            "acme korp 5", "zzzzzzzz",
+        ]
+        sets = {n: _char_hashes(n) for n in names}
+        expect = _replica_lsh(sets, 0.0)
+        unvalved = _replica_lsh(sets, 0.0, max_bucket=10**9)
+        assert len(unvalved) - len(expect) >= 210 * 209 // 2
+        assert any(a == "acme corp 5" for a, _, _ in expect)
+        surfaces = spark.createDataFrame([(n,) for n in names], "name string")
+        got = {
+            (r["a"], r["b"], r["jaccard"])
+            for r in candidate_pairs(surfaces, jaccard_threshold=0.0).collect()
+        }
+        assert got == expect
+
+        # planted near-duplicate documents: an exact copy, one swapped
+        # word, a two-word tail, half the words replaced
+        rng = random.Random(3)
+        vocab = [f"w{i}" for i in range(60)]
+        texts = []
+        for _ in range(4):
+            base = [rng.choice(vocab) for _ in range(20)]
+            swapped = list(base)
+            swapped[rng.randrange(20)] = "swapped"
+            half = base[:10] + [rng.choice(vocab) for _ in range(10)]
+            for words in (base, base, swapped, base + ["tail", "words"], half):
+                texts.append(" ".join(words))
+        texts.append("nothing in common with the rest")
+        docs = spark.createDataFrame(
+            list(enumerate(texts)), "doc_id long, text string"
+        )
+        reps = {}
+        for i, t in enumerate(texts):
+            reps.setdefault(t, i)
+        expect = _replica_lsh({r: _word_hashes(t) for t, r in reps.items()}, 0.5)
+        assert len(expect) >= 8
+        got = {
+            (r["doc_a"], r["doc_b"]): r["jaccard"]
+            for r in minhash_dedup_pairs(docs, jaccard_threshold=0.5).collect()
+        }
+        assert set(got) == {(a, b) for a, b, _ in expect}
+        for a, b, j in expect:
+            assert got[(a, b)] == pytest.approx(j, abs=1e-6)
 
 
 class TestBlockedMapping:

@@ -124,23 +124,23 @@ def main():
         plan(enc_vocab, max_lines=400),
     ))
 
-    # 10. document MinHash-LSH pairs (bench q6): since round 5 every
-    # LSH exchange — band self-join, pair distinct, Jaccard verify —
-    # is keyed by the 8-byte representative doc_id. Expect: exactly ONE
-    # Exchange whose hashpartitioning key is the raw `text` column (the
-    # representative-id hash-agg); every later hashpartitioning uses
-    # `name`/`a`/`b` bigints or band columns, so full documents never
-    # ride a shuffle past the first agg.
+    # 10. document MinHash-LSH pairs (bench q6): every LSH exchange —
+    # bucket count, band self-join, pair distinct — carries the 8-byte
+    # representative doc_id and shingle hashes, never the text. Expect
+    # one Exchange whose hashpartitioning key is the raw `text` column
+    # (the representative-id hash-agg) per self-join side — the two
+    # sides are one subtree, which AQE runs once (ReusedExchange); every
+    # later hashpartitioning uses `name`/`a`/`b` bigints or band
+    # columns, so full documents never ride a shuffle past the first agg.
     from pyrdf2vec_spark.functions.dedup import minhash_dedup_pairs
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     sections.append((
         "document MinHash-LSH near-dup pairs "
-        "(expect ONE text-keyed Exchange — the representative-id agg — "
-        "then bigint-keyed exchanges only)",
-        plan(minhash_dedup_pairs(docs, jaccard_threshold=0.5,
-                                 checkpoint=False),
-             max_lines=400),
+        "(expect one text-keyed Exchange — the representative-id agg — "
+        "per self-join side, reused at run time, then bigint- or "
+        "band-keyed exchanges only)",
+        plan(minhash_dedup_pairs(docs, jaccard_threshold=0.5), max_lines=400),
     ))
 
     out = ["# Physical plans — headline operators\n"]
